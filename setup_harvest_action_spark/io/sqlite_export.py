@@ -100,7 +100,10 @@ _BATCH = 10_000
 
 # terms merge on uri — the reference's insert-or-update (harvest.py:326-349).
 # Ids are NEVER forced: the db assigns (and keeps) its own rowids, so an
-# existing database's ids stay authoritative across re-exports.
+# existing database's ids stay authoritative across re-exports.  Rows
+# stream in state-id order, so on a fresh database the assigned rowids
+# ARE the state's dense ids (the reference's AUTOINCREMENT uri order),
+# whatever the shuffle partitioning of the state frames.
 _UPSERT_TERMS = """
 INSERT INTO terms (uri, created_at, updated_at) VALUES (?, ?, ?)
 ON CONFLICT(uri) DO UPDATE SET updated_at = excluded.updated_at
@@ -149,12 +152,22 @@ def export_sqlite(terms: DataFrame, term_fields: DataFrame, db_path: str) -> dic
     terms PK.  So terms insert WITHOUT ids (the db keeps or assigns its
     own), the db's uri→id map is read back (vocabulary-bounded, same
     O(|terms|) driver budget as the export itself), and term_fields
-    rows are rewired through ``terms.uri`` before insert."""
+    rows are rewired through ``terms.uri`` before insert.
+
+    Ordering contract: both tables stream in state-id order (``terms``
+    by ``id``, ``term_fields`` by ``id``).  On a fresh database SQLite
+    therefore assigns exactly the state's dense ids — the reference's
+    AUTOINCREMENT order (harvest.py:191) — independent of how the state
+    frames happen to be partitioned.  An existing database keeps its
+    own ids; new rows append after its max rowid in state-id order."""
     conn = sqlite3.connect(db_path)
     try:
         conn.execute("PRAGMA foreign_keys = ON")  # harvest.py:185
         conn.executescript(_DDL)
-        _stream(conn, _UPSERT_TERMS, terms, ["uri", "created_at", "updated_at"])
+        _stream(
+            conn, _UPSERT_TERMS, terms.orderBy("id"),
+            ["uri", "created_at", "updated_at"],
+        )
         uri_to_id = dict(conn.execute("SELECT uri, id FROM terms"))
 
         def resolve_term_id(vals):
@@ -171,6 +184,7 @@ def export_sqlite(terms: DataFrame, term_fields: DataFrame, db_path: str) -> dic
                 terms.select("id", "uri").alias("t"),
                 F.col("tf.term_id") == F.col("t.id"),
             )
+            .orderBy(F.col("tf.id"))
             .select(
                 "t.uri", "tf.field_uri", "tf.field_term", "tf.original_value",
                 "tf.created_at", "tf.updated_at",

@@ -434,9 +434,6 @@ def test_png_live_conformance_vs_libpng():
         import pytest as _pytest
 
         _pytest.skip("libpng16 not installed")
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo")
     from setup_harvest_action_spark.functions.multimodal import (
         encode_png_adv,
     )
@@ -767,9 +764,6 @@ def test_tiff_live_conformance_vs_libtiff():
         import pytest as _pytest
 
         _pytest.skip("libtiff not installed")
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo")
     from setup_harvest_action_spark.functions.tiff_codec import encode_tiff
     from tools.tiff_ab import _want_rgba, encode_ref, run_case
 
@@ -1375,9 +1369,6 @@ def test_gif_live_conformance_vs_giflib():
         import pytest as _pytest
 
         _pytest.skip("giflib not installed")
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo")
     from setup_harvest_action_spark.functions.multimodal import (
         encode_gif_adv,
     )
@@ -1924,9 +1915,6 @@ def test_webp_alpha_live_conformance_vs_libwebp():
 
     if ctypes.util.find_library("webp") is None:
         pytest.skip("libwebp not installed")
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo")
     from tools.webp_alpha_ab import (
         alpha_image,
         encode_rgba,
@@ -2085,9 +2073,6 @@ def test_jpeg_arith_live_conformance_vs_libjpeg():
 
     if ctypes.util.find_library("jpeg") is None:
         pytest.skip("libjpeg not installed")
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     try:
         from tools.jpeg_arith_ab import encode_jpeg_libjpeg
     except Exception:
@@ -2159,9 +2144,6 @@ def test_jpeg_subsampled_twins_and_libjpeg_closeness():
 
     if ctypes.util.find_library("jpeg") is None:
         pytest.skip("libjpeg not installed — fixture pins covered above")
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.jpeg_arith_ab import (
         decode_jpeg_libjpeg,
         encode_jpeg_libjpeg_subsampled,
@@ -2194,9 +2176,6 @@ def test_jpeg_decodes_libjpeg_444_within_idct_rounding():
 
     if ctypes.util.find_library("jpeg") is None:
         pytest.skip("libjpeg not installed")
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.jpeg_arith_ab import decode_jpeg_libjpeg, encode_jpeg_libjpeg
 
     from setup_harvest_action_spark.functions.multimodal import (
@@ -2232,9 +2211,6 @@ def test_jpeg_restart_intervals_all_variants():
 
     if ctypes.util.find_library("jpeg") is None:
         pytest.skip("libjpeg not installed")
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import tools.jpeg_arith_ab as ab
 
     from setup_harvest_action_spark.functions.multimodal import decode_jpeg

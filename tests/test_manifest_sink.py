@@ -1090,6 +1090,7 @@ def test_delete_where_detects_concurrent_commit_conflict(sink, tmp_path):
     assert not os.path.exists(os.path.join(path, "_commit.lock"))
 
 
+@pytest.mark.usefixtures("restore_spark_conf")
 def test_table_health_reports_small_files_and_clustering_depth(
     sink, tmp_path, capsys
 ):
@@ -1121,6 +1122,7 @@ def test_table_health_reports_small_files_and_clustering_depth(
     assert "8 files" in out and "clustering depth clustered" in out
 
 
+@pytest.mark.usefixtures("restore_spark_conf")
 def test_shallow_clone_is_zero_copy_and_diverges_independently(
     sink, tmp_path, capsys
 ):

@@ -108,6 +108,7 @@ def test_union_distinct_order_limit_ops(spark, sf_dir):
     assert [r.k for r in rows] == [24, 23, 22]
 
 
+@pytest.mark.usefixtures("restore_spark_conf")
 def test_pipeline_cli_runs_spec_file(spark, tmp_path, capsys):
     import json
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 import sqlite3
 import subprocess
 import sys
+from pathlib import Path
 from urllib.error import HTTPError
 
 import pytest
@@ -17,6 +18,8 @@ from setup_harvest_action_spark.sources.sparql import (
     get_member_count,
     sparql_source,
 )
+
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_backoff_retries_502_with_exponential_delays():
@@ -139,6 +142,51 @@ def test_sqlite_export_roundtrip(spark, tmp_path):
     conn.close()
 
 
+def test_sqlite_export_fresh_ids_follow_state_ids(spark, tmp_path):
+    """On a fresh database the exported ids are the state's dense ids
+    (the reference's AUTOINCREMENT uri order), whatever the shuffle
+    layout of the state frames: the partition order of this two-row
+    state differs between the partition counts tried."""
+    import datetime as dt
+
+    from setup_harvest_action_spark.harvest.load import HarvestState, harvest_batch
+    from setup_harvest_action_spark.io.sqlite_export import export_sqlite
+    from setup_harvest_action_spark.schemas import SPARQL_BINDINGS
+
+    bindings = spark.createDataFrame(
+        [("http://v.example/a", "A", "A-alt", "def a"),
+         ("http://v.example/b", "B", None, None)],
+        SPARQL_BINDINGS,
+    )
+    state, _ = harvest_batch(HarvestState.empty(spark), bindings,
+                             dt.datetime(2026, 1, 1))
+    want_terms = sorted((r["id"], r["uri"]) for r in state.terms.collect())
+    want_fields = sorted(
+        (r["id"], r["term_id"], r["field_uri"], r["original_value"])
+        for r in state.term_fields.collect()
+    )
+    assert [i for i, _ in want_terms] == [1, 2]
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        for n in (2, 4, 5, 8, 200):
+            spark.conf.set(key, str(n))
+            db = str(tmp_path / f"fresh_{n}.db")
+            export_sqlite(state.terms, state.term_fields, db)
+            conn = sqlite3.connect(db)
+            got_terms = conn.execute(
+                "SELECT id, uri FROM terms ORDER BY id").fetchall()
+            got_fields = conn.execute(
+                "SELECT id, term_id, field_uri, original_value "
+                "FROM term_fields ORDER BY id").fetchall()
+            conn.close()
+            assert got_terms == want_terms, n
+            assert got_fields == want_fields, n
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_cli_error_taxonomy_no_spark():
     # Usage error path exits 1 with the reference's message shape —
     # cheap (argparse + ValueError before any Spark session).
@@ -154,7 +202,7 @@ def test_cli_end_to_end_fake_endpoint(tmp_path):
         [sys.executable, "-m", "setup_harvest_action_spark", "harvest",
          "--fake-endpoint", "120", "--db", db,
          "--state-dir", str(tmp_path / "state"), "--batch-size", "50"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=300,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
     assert "New terms inserted: 120" in proc.stdout
@@ -173,7 +221,7 @@ def test_cli_bucketed_end_to_end(tmp_path):
         [sys.executable, "-m", "setup_harvest_action_spark", "harvest",
          "--fake-endpoint", "120", "--db", db, "--bucketed",
          "--state-buckets", "8", "--state-dir", state],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=300,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
     assert "New terms inserted: 120" in proc.stdout
@@ -554,6 +602,7 @@ def test_cli_catalog_list_and_errors(capsys):
     assert "unknown catalog query" in capsys.readouterr().out
 
 
+@pytest.mark.usefixtures("restore_spark_conf")
 def test_cli_manifest_show_history_compact_vacuum(spark, tmp_path, capsys):
     """The manifest subcommand drives the table-format maintenance
     loop end to end: show -> history -> compact -> vacuum."""
@@ -592,6 +641,7 @@ def test_cli_manifest_show_history_compact_vacuum(spark, tmp_path, capsys):
     assert scan_manifest(spark, path).count() == 150
 
 
+@pytest.mark.usefixtures("restore_spark_conf")
 def test_cli_manifest_refs_tag_branch_publish(spark, tmp_path, capsys):
     """The r10-late ref surface: --tag, --branch, --refs, --publish,
     --drop-ref drive write-audit-publish from the command line."""
@@ -634,6 +684,7 @@ def test_cli_manifest_refs_tag_branch_publish(spark, tmp_path, capsys):
     assert "base" not in capsys.readouterr().out
 
 
+@pytest.mark.usefixtures("restore_spark_conf")
 def test_cli_manifest_delete_merge_changes(spark, tmp_path, capsys):
     """The r10 CLI surface for the CRUD square: --delete-where,
     --merge-from/--merge-on, and --changes (batch CDC counts)."""
@@ -675,6 +726,7 @@ def test_cli_manifest_delete_merge_changes(spark, tmp_path, capsys):
     ) == 1  # --merge-on required
 
 
+@pytest.mark.usefixtures("restore_spark_conf")
 def test_cli_ann_build_append_search(spark, tmp_path, capsys):
     """End-to-end CLI drive of the stored ANN index: build on a prefix,
     append the rest (O(batch) merge), search with a corpus probe."""

@@ -31,8 +31,10 @@ import contextlib
 import json
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO_ROOT))
 
 
 # Adjudicated-benign unpartitioned-window sites (the r13 verdict's #5

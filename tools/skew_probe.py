@@ -68,8 +68,10 @@ import os
 import shutil
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO_ROOT))
 
 SRC = "/root/testdata/sf0.1"
 DST = "/tmp/spark_graft_skew10x"

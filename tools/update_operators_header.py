@@ -16,10 +16,12 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO_ROOT))
 
-OPERATORS_MD = "/root/repo/OPERATORS.md"
+OPERATORS_MD = REPO_ROOT / "OPERATORS.md"
 HEADER_RE = re.compile(r"^Catalog: \d+ queries \(\d+ with DuckDB hash-checked oracles, \d+ rows-only")
 
 

@@ -15,10 +15,12 @@ import math
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO_ROOT))
 
 FIXTURE_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
